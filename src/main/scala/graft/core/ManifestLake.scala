@@ -3017,34 +3017,42 @@ object ManifestLake {
     * directory, merge rewrites ONLY the files whose keys collide.
     *
     * Algorithm (Delta's, re-expressed over the manifest):
-    *  1. one detection scan tags matching rows with `input_file_name`
-    *     via a semi-join against the update keys → the affected files;
-    *  2. each affected file rewrites concurrently, keeping rows whose
-    *     key is NOT updated (anti-join — NULL-safe on the key equality
-    *     because both sides bind the same columns);
-    *  3. ALL update rows stage as new files (matched replacements and
-    *     fresh inserts alike — they are indistinguishable at write
-    *     time and both must land once);
+    *  1. one key pass ([[planKeys]]: one job, no shuffle) counts the
+    *     update key tuples — it refuses duplicate keys (two updates
+    *     for one key have no deterministic winner; Delta throws the
+    *     same way), totals the update rows, and keeps as candidates
+    *     only the files that pass the exact value set of EVERY key
+    *     column the lake tracks (stats, bloom or partition directory);
+    *  2. when some candidate can match, one detection query semi-joins
+    *     the candidates against the update keys and groups the matches
+    *     by key: the affected files and the matched-update count in one
+    *     pass. When none can — an incremental batch of new keys — no
+    *     detection scan runs;
+    *  3. the affected files' survivors (anti-join on the update keys)
+    *     and ALL update rows (matched replacements and fresh inserts
+    *     alike) stage through one write job;
     *  4. one CAS commit swaps affected → rewritten + staged, op
     *     "merge". Concurrent appends rebase in (set-union); a racing
     *     commit that REPLACED an input file aborts loudly — re-run
     *     against the new snapshot.
     *
-    * Duplicate keys in `updates` are refused up front (two updates for
-    * one key have no deterministic winner — Delta throws the same
-    * way). Stats and blooms re-derive for every written file over the
-    * snapshot's tracked columns, so a merge never erodes the skipping
-    * index. Merge commits are CDC-invisible ([[changedFiles]] — their
-    * added files mix carried and new rows).
+    * An empty `updates` frame commits nothing. A lake without files
+    * that declares a partition column ([[create]]) takes the rows as an
+    * append under its declared layout; without a declaration, merging
+    * into it refuses. Stats and blooms re-derive for every written
+    * file over the snapshot's tracked columns, so a merge never erodes
+    * the skipping index. Merge commits are CDC-invisible
+    * ([[changedFiles]] — their added files mix carried and new rows).
     *
-    * Scale: the detection scan is one pushdown-pruned pass over the
-    * lake joined against delta-sized keys (AQE broadcasts small
-    * update sets); rewrite cost is proportional to files TOUCHED, not
-    * lake size; the staged write is delta-sized. The 100 TB shape is
-    * "daily upsert batch against a clustered lake": with updates
-    * clustered on the same key as the layout, affected files ≈
-    * update-key-range / file-range — the same delta-proportional
-    * contract as [[deleteWhere]]. */
+    * Scale: the key pass reads the delta once; past 100 000 distinct
+    * keys it falls back to one grouped aggregate and per-column
+    * min/max envelopes (still exact for clustered batches). Detection
+    * reads only candidate files; rewrite cost is proportional to files
+    * TOUCHED, not lake size; the staged write is delta-sized. The
+    * 100 TB shape is "daily upsert batch against a clustered lake":
+    * with updates clustered on the same key as the layout, affected
+    * files ≈ update-key-range / file-range — the same
+    * delta-proportional contract as [[deleteWhere]]. */
   def merge(s: SparkSession, dir: String, updates: DataFrame,
             keyCols: Seq[String]): MergeStats =
     latestSnapshot(dir).filter(_.mappingActive) match {
@@ -3083,88 +3091,57 @@ object ManifestLake {
         s"(${schema.fieldNames.sorted.mkString(",")}), got " +
         s"(${updates.columns.sorted.mkString(",")}) — schema evolution " +
         "belongs to append")
+    // an empty lake takes the declared layout; without a declaration
+    // there is no layout to merge into
     val partitionCol = snap.files.headOption.map(_.takeWhile(_ != '='))
+      .orElse(snap.declaredPartitionCol)
       .getOrElse(throw new IllegalStateException(
-        s"lake $dir has no files — merge into an empty lake is an append"))
+        s"lake $dir has no files and declares no partition column — " +
+          "merge into an empty lake is an append"))
 
-    import org.apache.spark.sql.functions.{col, count => cnt, input_file_name, lit, max => fmax, min => fmin, sum => fsum}
+    import org.apache.spark.sql.functions.{col, count => cnt, input_file_name, lit}
     val keyed = updates.persist()
     try {
-      // ONE grouped pass serves three consumers that each ran their own
-      // job before (r17, guide §1.2: remove passes first): the
-      // duplicate-key gate (any group with n > 1), the driver key
-      // sample for exact per-file pruning, and the update-row total
-      // MergeStats needs at the end (Σ n). Collected bounded: a limit
-      // returning ≤ MaxDriverKeys rows proves the distinct key set is
-      // complete; a bigger delta falls back to one full aggregate for
-      // the gate + total and an envelope for pruning, exactly the old
-      // behavior.
-      val MaxDriverKeys = 100000
-      val grouped = keyed.groupBy(keyCols.map(col): _*)
-        .agg(cnt(lit(1)).as("__graft_merge_n"))
-      val sample = grouped.limit(MaxDriverKeys + 1).collect()
-      val nIdx = keyCols.length
-      val sampleComplete = sample.length <= MaxDriverKeys
-      val totalUpdates: Long =
-        if (sampleComplete) {
-          require(sample.forall(_.getLong(nIdx) <= 1L),
-            "updates carry duplicate keys — two updates for one key have no " +
-              "deterministic winner; dedupe (e.g. keep-latest) before merging")
-          sample.map(_.getLong(nIdx)).sum
-        } else {
-          val st = grouped
-            .agg(fmax(col("__graft_merge_n")), fsum(col("__graft_merge_n"))).head()
-          require(st.getLong(0) <= 1L,
-            "updates carry duplicate keys — two updates for one key have no " +
-              "deterministic winner; dedupe (e.g. keep-latest) before merging")
-          st.getLong(1)
-        }
-      val keys = keyed.select(keyCols.map(col): _*).distinct()
-
-      // 1. detection: which files hold a matching key. With ONE key
-      // column the lake tracks, a driver-collectable delta prunes
-      // per-file by the EXACT key set ([[pruneFilesForKeys]]: range
-      // stats overlap + bloom confirmation, the q141 point-lookup
-      // rules key-set-wise) — robust to the common mixed batch whose
-      // fresh-insert keys would blow a min/max envelope out to the
-      // whole lake. Deltas too large to collect fall back to the
-      // envelope (still exact for clustered batches); anything else
-      // scans everything. Files without metadata on the key are
-      // conservatively kept throughout.
-      val candidates: Vector[String] = keyCols match {
-        case Seq(k) if snap.stats.valuesIterator.flatten.exists(_.col == k) ||
-            snap.blooms.valuesIterator.flatten.exists(_.col == k) ||
-            partitionColOf(snap).contains(k) =>
-          if (sample.isEmpty) Vector.empty
-          else if (sampleComplete)
-            pruneFilesForKeys(snap, k, sample.toIndexedSeq.map(_.get(0)))
-          else {
-            val env = keyed.agg(fmin(col(k)), fmax(col(k))).head()
-            schema(schema.fieldIndex(k)).dataType match {
-              case _: org.apache.spark.sql.types.NumericType =>
-                pruneFiles(snap, k,
-                  BigDecimal(env.get(0).toString), BigDecimal(env.get(1).toString))
-              case org.apache.spark.sql.types.StringType =>
-                pruneFilesString(snap, k, env.getString(0), env.getString(1))
-              case _ => snap.files
-            }
-          }
-        case _ => snap.files
+      // ONE key pass ([[planKeys]]) serves the duplicate-key gate, the
+      // update-row total and the candidate files
+      val plan = planKeys(snap, keyed, keyCols, nullSafe = false)
+      require(!plan.duplicated,
+        "updates carry duplicate keys — two updates for one key have no " +
+          "deterministic winner; dedupe (e.g. keep-latest) before merging")
+      if (plan.rows == 0L) return MergeStats(0L, 0L, 0)
+      val aligned = keyed.select(schema.fieldNames.map(col).toIndexedSeq: _*)
+      if (snap.files.isEmpty) {
+        append0(s, dir, aligned, partitionCol, 1024 * 1024, Map.empty,
+          Nil, Nil, None)
+        return MergeStats(0L, plan.rows, 0)
       }
-      val affected: Vector[String] =
-        if (candidates.isEmpty) Vector.empty
+      // semi/anti joins ignore duplicates, so no distinct is needed
+      val keys = keyed.select(keyCols.map(col): _*)
+
+      // 2. detection, only when some file can match: ONE query groups
+      // the matched keys, attributes each to the first file holding it
+      // and yields the affected files with the matched-update count
+      // (the gate proved update keys unique, so matched keys = matched
+      // update rows)
+      val (affected, matchedUpdates): (Vector[String], Long) =
+        if (plan.candidates.isEmpty) (Vector.empty, 0L)
         else {
-          val affectedAbs = lakeFiles(s, dir, snap, candidates, snap.schema)
+          val perFile = lakeFiles(s, dir, snap, plan.candidates, snap.schema)
             .withColumn("__graft_file", input_file_name())
             .join(keys, keyCols, "left_semi")
-            .select("__graft_file").distinct()
-            .collect().map(_.getString(0)).toVector
-          affectedAbs.map(relFromUri)
+            .groupBy(keyCols.map(col): _*)
+            .agg(array_sort(collect_set(col("__graft_file"))).as("__graft_fs"))
+            .select(posexplode(col("__graft_fs")).as(Seq("__graft_pos", "__graft_file")))
+            .groupBy("__graft_file")
+            .agg(sum(when(col("__graft_pos") === 0, 1L).otherwise(0L)))
+            .collect()
+          (perFile.map(r => relFromUri(r.getString(0))).toVector,
+            perFile.map(_.getLong(1)).sum)
         }
       require(affected.forall(snap.files.contains),
         s"detection scan returned files outside the snapshot: $affected")
 
-      // 2. rewrite the affected files' survivors in ONE distributed
+      // 3. rewrite the affected files' survivors in ONE distributed
       // job: read them together (basePath restores the partition
       // column), anti-join the update keys, stage partitioned. No
       // shuffle — partitionBy routes rows task-per-input-split, so
@@ -3182,14 +3159,13 @@ object ManifestLake {
         else if (affected.forall(snap.rows.contains)) affected.flatMap(snap.netRows).sum
         else parMapMeta(affected)(f => rowCount(s, root.resolve(f)) -
           snap.dvs.get(f).fold(0L)(_.count)).sum
-      // 2b + 3 FUSED (r17, guide §1.2): the affected files' survivors
+      // FUSED (r17, guide §1.2): the affected files' survivors
       // and the update rows stage through ONE write job instead of two
       // — the survivor branch carries an observed row count
       // (CollectMetricsExec rides the write, no extra job — the q184
       // observed-metric discipline) so the rows-updated accounting
       // that previously needed the kept files' footer counts still
       // computes exactly: rowsUpdated = rowsBefore − survivorRows.
-      val aligned = keyed.select(schema.fieldNames.map(col).toIndexedSeq: _*)
       val alignedChecked =
         withCheckConstraints(aligned, snap.constraints, snap.renames)
       val survivorObs = org.apache.spark.sql.Observation()
@@ -3235,7 +3211,7 @@ object ManifestLake {
           val affectedKeys =
             if (affected.isEmpty) None
             else Some(lakeFiles(s, dir, snap, affected, snap.schema)
-              .select(keyCols.map(col): _*).distinct())
+              .select(keyCols.map(col): _*))
           val pre = affectedKeys.map(_ =>
             lakeFiles(s, dir, snap, affected, snap.schema)
               .select(schema.fieldNames.map(col).toIndexedSeq: _*)
@@ -3267,25 +3243,12 @@ object ManifestLake {
       }
       // rows removed = affected-file rows before minus the survivor
       // rows the fused stage observed — metadata + an observed metric,
-      // no extra data read
-      val rowsUpdated = rowsBefore - survivorRows
-      // rowsInserted counts UPDATE ROWS whose key matched nothing —
-      // computed by a semi-join against the affected files (delta-
-      // sized), not as total-minus-removed: a key holding multiple
-      // lake rows (legal — merge replaces all of them) removes more
-      // rows than it matched update rows, and the subtraction would
-      // go wrong (even negative)
-      val matchedUpdates =
-        if (affected.isEmpty) 0L
-        else {
-          keyed.join(
-            lakeFiles(s, dir, snap, affected, snap.schema)
-              .select(keyCols.map(col): _*).distinct(),
-            keyCols, "left_semi").count()
-        }
-      // totalUpdates came from the fused grouped pass — the old
-      // trailing keyed.count() job is gone (r17)
-      MergeStats(rowsUpdated, totalUpdates - matchedUpdates, affected.length)
+      // no extra data read. rowsInserted counts UPDATE ROWS whose key
+      // matched nothing, from the detection query, not total-minus-
+      // removed: a key holding several lake rows (legal — merge
+      // replaces all of them) removes more rows than it matched
+      MergeStats(rowsBefore - survivorRows, plan.rows - matchedUpdates,
+        affected.length)
     } finally { keyed.unpersist(); () }
   }
 
@@ -3721,29 +3684,148 @@ object ManifestLake {
     * its executor task: delete-proportional parallelism, the driver
     * only collects the `(file, sidecarPath, unionCount)` manifest
     * entries. Shared by [[deleteWhereDv]] and [[updateWhereDv]]. */
-  /** Driver sample of one column's DISTINCT values in ONE job, no
-    * shuffle: per-partition capped hash sets, merged on the driver.
-    * `Some(values)` is the COMPLETE distinct set (null included when
-    * present); `None` means more than `cap` distinct values — fall
-    * back to envelope pruning / a distributed semi-join. Replaces the
-    * `.distinct().limit(cap+1).collect()` shape, whose CollectLimit
-    * scales up across 2+ Spark jobs per call and whose distinct pays a
-    * shuffle — the maintenance chains ran that per micro-batch (guide
-    * §1.2 #1: remove passes). Overflow detection is sound: a partition
-    * that truncates has already gathered cap+1 values, so the driver
-    * union crosses `cap` whenever any value was dropped. */
-  private def sampleDistinct(df: DataFrame, k: String, cap: Int)
-      : Option[IndexedSeq[Any]] = {
-    val parts = df.select(col(k)).rdd.mapPartitions { it =>
-      val set = scala.collection.mutable.HashSet.empty[Any]
-      while (it.hasNext && set.size <= cap) set += it.next().get(0)
-      set.iterator
-    }.collect()
-    val all = parts.toSet
-    if (all.size > cap) None else Some(all.toIndexedSeq)
+  /** Key-tuple identity and counting for [[sampleKeyTuples]]: a
+    * standalone serializable object, so the executor closure captures
+    * nothing of the lake. */
+  private object KeyTuples extends Serializable {
+    type Counts = java.util.HashMap[java.util.List[AnyRef], (org.apache.spark.sql.Row, Long)]
+
+    /** A key value's identity under Spark's grouping rules, so a
+      * driver sample dedupes exactly as `groupBy` does: `-0.0` groups
+      * with `0.0`, every NaN groups together (boxed `equals` compares
+      * canonical bits), NULLs group together, binary compares by
+      * content. */
+    def value(v: Any): AnyRef = v match {
+      case d: java.lang.Double => java.lang.Double.valueOf(d + 0.0)
+      case f: java.lang.Float  => java.lang.Float.valueOf(f + 0.0f)
+      case b: Array[Byte]      => scala.collection.immutable.ArraySeq.unsafeWrapArray(b)
+      case o                   => o.asInstanceOf[AnyRef]
+    }
+
+    def add(m: Counts, r: org.apache.spark.sql.Row, n: Long): Unit =
+      m.merge(java.util.Arrays.asList(r.toSeq.map(value): _*), (r, n),
+        (a, b) => (a._1, a._2 + b._2))
   }
 
-  /** [[sampleDistinct]] plus the window's max `verCol` in the SAME
+  /** Driver sample of `keys`' DISTINCT row tuples, each with its row
+    * count, in ONE job and no shuffle: per-partition capped hash maps,
+    * merged on the driver. `Some` is the COMPLETE tuple set (NULLs
+    * included); `None` means more than `cap` distinct tuples — fall
+    * back to a grouped aggregate, envelope pruning and a distributed
+    * semi-join. Replaces the grouped `.limit(cap+1).collect()` shape,
+    * whose CollectLimit scales up across several jobs and whose
+    * grouping pays a shuffle. Overflow detection is sound: a partition
+    * that truncates has already gathered cap+1 tuples, so the driver
+    * union crosses `cap` whenever any tuple was dropped. */
+  private def sampleKeyTuples(keys: DataFrame, cap: Int)
+      : Option[IndexedSeq[(org.apache.spark.sql.Row, Long)]] = {
+    val kt = KeyTuples
+    val n = keys.schema.length
+    // a Dataset action, not an RDD job: an observed key frame (the
+    // view maintainers' high-water) reports its metric on this pass
+    val parts = keys.mapPartitions { it =>
+      val m = new kt.Counts()
+      while (it.hasNext && m.size <= cap) kt.add(m, it.next(), 1L)
+      m.values.iterator.asScala.map { case (r, c) =>
+        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ c) }
+    }(org.apache.spark.sql.Encoders.row(
+      keys.schema.add("__graft_key_n", org.apache.spark.sql.types.LongType))).collect()
+    val all = new KeyTuples.Counts()
+    parts.foreach(r => KeyTuples.add(all,
+      org.apache.spark.sql.Row.fromSeq(r.toSeq.take(n)), r.getLong(n)))
+    if (all.size > cap) None else Some(all.values.asScala.toIndexedSeq)
+  }
+
+  /** The most distinct keys a keyed write or view maintainer samples to
+    * the driver — bounded driver state, not corpus-proportional. */
+  private val MaxDriverKeys = 100000
+
+  /** What [[planKeys]] learned about a keyed write's key frame.
+    * `sample` is the complete set of key tuples that can match a lake
+    * row under the caller's NULL rule (None past the driver cap);
+    * `rows` and `duplicated` describe the whole frame (its row count,
+    * and whether any tuple occurs twice); `candidates` are the files
+    * that can hold a matching row. */
+  private[core] final case class KeyPlan(
+      sample: Option[IndexedSeq[org.apache.spark.sql.Row]], rows: Long,
+      duplicated: Boolean, candidates: Vector[String])
+
+  /** Test seam: while set on the calling thread, [[planKeys]] keeps
+    * every file as a candidate — the unpruned reference its specs
+    * compare keyed writes against. */
+  private[core] val keyPlanUnpruned = new scala.util.DynamicVariable[Boolean](false)
+
+  /** The one key planner under every keyed write ([[merge]],
+    * [[deleteKeysDv]], [[replaceKeysBatch]]). One no-shuffle job
+    * ([[sampleKeyTuples]]) counts the key tuples; a complete sample
+    * (≤ `cap` tuples) prunes per file by the EXACT value set of every
+    * key column the lake tracks (stats, bloom or partition directory,
+    * [[pruneFilesForKeys]]) and keeps the intersection: a file can
+    * hold a matching row only if it passes every column's test. Past
+    * the cap, one grouped aggregate yields the duplicate gate, the
+    * row total and each tracked column's min/max envelope. Files
+    * without metadata on a column are kept by that column's test.
+    *
+    * `nullSafe` is the caller's match rule: SQL equality (false) never
+    * matches a NULL component, so such tuples leave the sample;
+    * null-safe matching (true) keeps them, and a column whose keys
+    * include NULL keeps every file (min/max stats exclude nulls). */
+  private[core] def planKeys(snap: Snapshot, keys: DataFrame,
+                             keyCols: Seq[String], nullSafe: Boolean,
+                             cap: Int = MaxDriverKeys): KeyPlan = {
+    val tracked = keyCols.filter(k =>
+      snap.stats.valuesIterator.flatten.exists(_.col == k) ||
+        snap.blooms.valuesIterator.flatten.exists(_.col == k) ||
+        partitionColOf(snap).contains(k))
+    def intersect(keep: Seq[Vector[String]]): Vector[String] =
+      if (keyPlanUnpruned.value) snap.files
+      else keep.map(_.toSet).foldLeft(snap.files)((fs, k) => fs.filter(k))
+    val keyFrame = keys.select(keyCols.map(col): _*)
+    sampleKeyTuples(keyFrame, cap) match {
+      case Some(counted) =>
+        val tuples = counted.map(_._1).filter(r =>
+          nullSafe || !(0 until r.length).exists(r.isNullAt))
+        val candidates = intersect(
+          if (tuples.isEmpty) Seq(Vector.empty)
+          else tracked.map { k =>
+            val i = keyCols.indexOf(k)
+            pruneFilesForKeys(snap, k,
+              tuples.map(_.get(i)).distinctBy(KeyTuples.value))
+          })
+        KeyPlan(Some(tuples), counted.map(_._2).sum, counted.exists(_._2 > 1L),
+          candidates)
+      case None =>
+        val grouped = keyFrame.groupBy(keyCols.map(col): _*)
+          .agg(count(lit(1)).as("__graft_key_n"))
+        val aggs = Seq(max(col("__graft_key_n")), sum(col("__graft_key_n"))) ++
+          tracked.flatMap(k => Seq(min(col(k)), max(col(k)), max(col(k).isNull)))
+        val st = grouped.agg(aggs.head, aggs.tail: _*).head()
+        val candidates = intersect(tracked.zipWithIndex.map { case (k, j) =>
+          val (lo, hi) = (st.get(2 + 3 * j), st.get(3 + 3 * j))
+          (lo, hi) match {
+            case _ if nullSafe && st.getBoolean(4 + 3 * j) => snap.files
+            case (a: String, b: String) => pruneFilesString(snap, k, a, b)
+            case _ => (numBound(lo), numBound(hi)) match {
+              case (Some(a), Some(b)) => pruneFiles(snap, k, a, b)
+              case _                  => snap.files
+            }
+          }
+        })
+        KeyPlan(None, st.getLong(1), st.getLong(0) > 1L, candidates)
+    }
+  }
+
+  /** A numeric key value as an exact bound; None for NULL, NaN,
+    * infinities and non-numbers (pruning then keeps the file). */
+  private def numBound(v: Any): Option[BigDecimal] = v match {
+    case d: java.lang.Double if d.isNaN || d.isInfinite => None
+    case f: java.lang.Float if f.isNaN || f.isInfinite  => None
+    case n: java.lang.Number => Some(BigDecimal(n.toString))
+    case _                   => None
+  }
+
+  /** One column's distinct values ([[sampleKeyTuples]]' one-job shape)
+    * plus the window's max `verCol` in the SAME
     * no-shuffle job — the join-view maintainer's file-prune sample and
     * its registry high-water from one pass, so the fast (`isin`)
     * detection path never waits on an observed metric that no action
@@ -3785,6 +3867,9 @@ object ManifestLake {
   private def isinSafe(vals: Seq[Any]): Boolean =
     vals.length <= IsinLiteralMax && vals.forall {
       case null => true
+      // `isin` and its parquet pushdown may compare floats bitwise,
+      // where the semi-join equates -0.0 with 0.0
+      case _: java.lang.Double | _: java.lang.Float => false
       case _: String | _: java.lang.Number | _: java.lang.Boolean |
            _: java.sql.Date | _: java.sql.Timestamp => true
       case _ => false
@@ -3822,6 +3907,26 @@ object ManifestLake {
         out.iterator
       }.collect()
   }
+
+  /** The detection half of every DV write: scan `files` with their
+    * existing deletion vectors applied (an already-deleted row can't
+    * be deleted again), keep the rows `hits` selects, and write their
+    * position sidecars ([[writeDvSidecars]]). No files, no scan. */
+  private def dvSidecarsOf(s: SparkSession, dir: String, snap: Snapshot,
+                           files: Vector[String])(hits: DataFrame => DataFrame)
+      : Array[(String, String, Long)] =
+    if (files.isEmpty) Array.empty
+    else {
+      val raw = manifestScan(s, dir, files, snap.schema,
+          restorePartitions = true, snap.sizes)
+        .withColumn("__graft_dv_path", col("_metadata.file_path"))
+        .withColumn("__graft_dv_idx", col("_metadata.row_index"))
+      val alive = dvDeletedPredicate(s, dir, snap, files).fold(raw)(deleted =>
+        raw.filter(!deleted(col("__graft_dv_path"), col("__graft_dv_idx"))))
+      val relOf = udf((p: String) => relFromUri(p))
+      writeDvSidecars(s, dir, snap, hits(alive)
+        .select(relOf(col("__graft_dv_path")).as("f"), col("__graft_dv_idx").as("i")))
+    }
 
   /** Merge-on-read targeted deletion — [[deleteWhere]]'s DELETION
     * VECTOR twin (Delta DVs / Iceberg position deletes). Where the
@@ -3870,22 +3975,12 @@ object ManifestLake {
         c
       case None => selfCandidates(s, snap, predicate).getOrElse(snap.files)
     }
-    if (scanFiles.isEmpty) return 0L
-    val raw = manifestScan(s, dir, scanFiles, snap.schema,
-        restorePartitions = true, snap.sizes)
-      .withColumn("__graft_dv_path", col("_metadata.file_path"))
-      .withColumn("__graft_dv_idx", col("_metadata.row_index"))
-    val alive = dvDeletedPredicate(s, dir, snap, scanFiles).fold(raw)(deleted =>
-      raw.filter(!deleted(col("__graft_dv_path"), col("__graft_dv_idx"))))
-    val relOf = udf((p: String) => relFromUri(p))
     // SQL DELETE rule: NULL predicate = not deleted (coalesce false).
     // The predicate is user-facing — evaluate it on the LOGICAL view
     // (toLogical keeps the __graft position columns, which are not
     // mapped); positions are physical either way.
-    val matched = toLogical(snap, alive).filter(coalesce(predicate, lit(false)))
-      .select(relOf(col("__graft_dv_path")).as("f"), col("__graft_dv_idx").as("i"))
-
-    val updates = writeDvSidecars(s, dir, snap, matched)
+    val updates = dvSidecarsOf(s, dir, snap, scanFiles)(alive =>
+      toLogical(snap, alive).filter(coalesce(predicate, lit(false))))
     if (updates.isEmpty) return 0L
     require(updates.forall(u => snap.files.contains(u._1)),
       s"detection scan returned files outside the snapshot: ${updates.map(_._1).take(3).toSeq}")
@@ -3918,17 +4013,18 @@ object ManifestLake {
 
   /** Keyed merge-on-read DELETE — [[deleteWhereDv]] driven by a KEY
     * FRAME instead of a predicate: the GDPR / incremental-maintenance
-    * shape ("delete exactly these ids"), fully distributed — the key
-    * set never collects to the driver and never becomes an `isin`
-    * literal (whose expression tree grows with the key count).
-    * Detection is a LEFT SEMI join of the pruned candidate scan
-    * against the distinct keys (AQE broadcasts small key sets);
-    * candidate pruning reuses [[merge]]'s rules — the exact per-file
-    * key-set probe (stats overlap + bloom confirmation) when the
-    * single key column is tracked and the key set is
-    * driver-collectable (bounded at 100 k — bounded driver state, not
-    * corpus-proportional), else the min/max envelope, else the full
-    * file list. Cost ∝ files holding matches + deleted-row varints.
+    * shape ("delete exactly these ids"). Candidates come from the shared key planner ([[planKeys]], as
+    * in [[merge]]): one no-shuffle job samples the key tuples (bounded
+    * at 100 k — bounded driver state, not corpus-proportional), and
+    * the candidate files are those that pass the exact value set of
+    * every key column the lake tracks; past the cap, min/max envelopes
+    * stand in. Keys match by SQL equality, so a tuple with a NULL
+    * component deletes nothing. Detection is an `isin` filter pushed
+    * into the candidate scan for a small single-column sample (at most
+    * [[IsinLiteralMax]] values, so the expression tree stays small),
+    * else a LEFT SEMI join against the keys (the sampled tuples, or
+    * the key frame past the cap). Cost ∝ files holding matches +
+    * deleted-row varints.
     * Commit/race semantics are [[deleteWhereDv]]'s verbatim: sidecar
     * union, set-union rebase over appends, loud abort when a racing
     * commit replaced or re-vectored a touched file. */
@@ -3953,88 +4049,46 @@ object ManifestLake {
       require(missing.isEmpty,
         s"key columns ${missing.mkString(",")} not in the lake schema")
     }
-    val MaxDriverKeys = 100000
-    // single tracked key: ONE no-shuffle job samples the distinct keys
-    // to the driver (the maintenance chains run this per micro-batch —
-    // previously a distinct shuffle + 2-job CollectLimit). A complete
-    // small sample prunes files AND turns the detection semi-join into
-    // an `isin` filter that pushes down to the parquet scan; nulls are
-    // dropped first (the inner semi-join never matched them either).
-    val trackedKey: Option[String] = keyCols match {
-      case Seq(k) if snap.stats.valuesIterator.flatten.exists(_.col == k) ||
-          snap.blooms.valuesIterator.flatten.exists(_.col == k) ||
-          partitionColOf(snap).contains(k) => Some(k)
-      case _ => None
+    val plan = planKeys(snap, keys, keyCols, nullSafe = false)
+    val updates = dvSidecarsOf(s, dir, snap, plan.candidates) { alive =>
+      plan.sample match {
+        case Some(tuples) if keyCols.length == 1 && isinSafe(tuples.map(_.get(0))) =>
+          alive.filter(col(keyCols.head).isin(tuples.map(_.get(0)): _*))
+        case _ => alive.join(keyRows(s, keys, keyCols, plan), keyCols, "left_semi")
+      }
     }
-    val sampled: Option[IndexedSeq[Any]] =
-      trackedKey.flatMap(k => sampleDistinct(keys, k, MaxDriverKeys))
-    val nonNullSample = sampled.map(_.filterNot(_ == null))
-    if (nonNullSample.exists(_.isEmpty)) return 0L
-    // keyFrame is only needed when the sample cannot drive detection
-    val keyFrame: Option[DataFrame] =
-      if (nonNullSample.exists(isinSafe)) None
-      else Some(keys.select(keyCols.map(col): _*).distinct().persist())
-    try {
-      val candidates: Vector[String] = trackedKey match {
-        case Some(k) => nonNullSample match {
-          case Some(sample) => pruneFilesForKeys(snap, k, sample)
-          case None =>
-            val env = keyFrame.get.agg(min(col(k)), max(col(k))).head()
-            snap.schema.map(_(k).dataType) match {
-              case Some(_: org.apache.spark.sql.types.NumericType) =>
-                pruneFiles(snap, k,
-                  BigDecimal(env.get(0).toString), BigDecimal(env.get(1).toString))
-              case Some(org.apache.spark.sql.types.StringType) =>
-                pruneFilesString(snap, k, env.getString(0), env.getString(1))
-              case _ => snap.files
-            }
-        }
-        case None => snap.files
-      }
-      if (candidates.isEmpty) return 0L
-      val raw = manifestScan(s, dir, candidates, snap.schema,
-          restorePartitions = true, snap.sizes)
-        .withColumn("__graft_dv_path", col("_metadata.file_path"))
-        .withColumn("__graft_dv_idx", col("_metadata.row_index"))
-      val alive = dvDeletedPredicate(s, dir, snap, candidates).fold(raw)(deleted =>
-        raw.filter(!deleted(col("__graft_dv_path"), col("__graft_dv_idx"))))
-      val relOf = udf((p: String) => relFromUri(p))
-      val hits = (keyFrame, trackedKey, nonNullSample) match {
-        case (None, Some(k), Some(sample)) =>
-          alive.filter(col(k).isin(sample: _*))
-        case (Some(kf), _, _) =>
-          alive.join(kf, keyCols, "left_semi")
-        case other => throw new IllegalStateException(
-          s"unreachable detection shape: $other")
-      }
-      val matched = hits
-        .select(relOf(col("__graft_dv_path")).as("f"),
-          col("__graft_dv_idx").as("i"))
-      val updates = writeDvSidecars(s, dir, snap, matched)
-      if (updates.isEmpty) return 0L
-      require(updates.forall(u => snap.files.contains(u._1)),
-        s"detection scan returned files outside the snapshot: ${updates.map(_._1).take(3).toSeq}")
-      val touched = updates.map(_._1).toSet
-      commitLoop(root) {
-        case None => throw new IllegalStateException(s"manifest vanished from $dir")
-        case Some(latest) =>
-          if (!touched.forall(latest.files.contains))
+    if (updates.isEmpty) return 0L
+    require(updates.forall(u => snap.files.contains(u._1)),
+      s"detection scan returned files outside the snapshot: ${updates.map(_._1).take(3).toSeq}")
+    val touched = updates.map(_._1).toSet
+    commitLoop(root) {
+      case None => throw new IllegalStateException(s"manifest vanished from $dir")
+      case Some(latest) =>
+        if (!touched.forall(latest.files.contains))
+          throw new IllegalStateException(
+            "a concurrent commit replaced files this DV delete targeted — " +
+              "re-run deleteKeysDv against the new snapshot")
+        touched.foreach { f =>
+          if (latest.dvs.get(f) != snap.dvs.get(f))
             throw new IllegalStateException(
-              "a concurrent commit replaced files this DV delete targeted — " +
+              "a concurrent DV delete touched the same files — " +
                 "re-run deleteKeysDv against the new snapshot")
-          touched.foreach { f =>
-            if (latest.dvs.get(f) != snap.dvs.get(f))
-              throw new IllegalStateException(
-                "a concurrent DV delete touched the same files — " +
-                  "re-run deleteKeysDv against the new snapshot")
-          }
-          Some(Ledger(latest.files, latest.txns, latest.stats, "delete-dv",
-            latest.schema, latest.blooms, latest.rows,
-            dvs = Some(latest.dvs ++ updates.map { case (f, rel, c) =>
-              f -> DvStore.Dv(rel, c) })))
-      }
-      updates.map { case (f, _, c) => c - snap.dvs.get(f).fold(0L)(_.count) }.sum
-    } finally { keyFrame.foreach(_.unpersist()); () }
+        }
+        Some(Ledger(latest.files, latest.txns, latest.stats, "delete-dv",
+          latest.schema, latest.blooms, latest.rows,
+          dvs = Some(latest.dvs ++ updates.map { case (f, rel, c) =>
+            f -> DvStore.Dv(rel, c) })))
+    }
+    updates.map { case (f, _, c) => c - snap.dvs.get(f).fold(0L)(_.count) }.sum
+  }
+
+  /** The key rows a keyed write's detection joins against: the
+    * planner's complete sample as a driver-local relation (no second
+    * evaluation of `keys`), else the key frame itself. */
+  private def keyRows(s: SparkSession, keys: DataFrame, keyCols: Seq[String],
+                      plan: KeyPlan): DataFrame = {
+    val frame = keys.select(keyCols.map(col): _*)
+    plan.sample.fold(frame)(t => s.createDataFrame(t.asJava, frame.schema))
   }
 
   /** Merge-on-read targeted UPDATE — [[deleteWhereDv]]'s update twin
@@ -4516,8 +4570,9 @@ object ManifestLake {
     * before the CAS leaves the lake untouched (staged files and
     * sidecars are unreferenced garbage the vacuum census reclaims)
     * and the redelivery recomputes identically; after the CAS the
-    * gate skips. Detection cost is [[deleteKeysDv]]'s (pruned scan
-    * semi-joined against the distinct keys); the commit races like
+    * gate skips. Detection is [[deleteKeysDv]]'s (the shared key
+    * planner's candidates, then a pushed `isin` or a semi-join), but
+    * NULL-safe; the commit races like
     * [[updateWhereDv]] (loud abort when a concurrent commit replaced
     * or re-vectored a touched file). An EMPTY step (no keys, no rows)
     * still commits the txn bump, so exactly-once bookkeeping stays
@@ -4565,138 +4620,80 @@ object ManifestLake {
       require(missing.isEmpty,
         s"key columns ${missing.mkString(",")} not in the lake schema")
     }
-    // detection — [[deleteKeysDv]]'s pruning rules: exact per-file
-    // key-set probe when the single key column is tracked and
-    // driver-collectable, else the min/max envelope, else all.
-    // NULL keys match NULL-SAFELY throughout: this is a REPLACE
-    // primitive (the aggregate view's dims may legitimately be NULL
-    // — a NULL group key is a group like any other), not a SQL join.
-    // Pruning falls back to the full file list when the key set
-    // carries a NULL (min/max stats exclude nulls, so a stats prune
-    // could drop the very files holding the NULL-key rows).
-    // The sample is ONE no-shuffle job ([[sampleDistinct]]); a small
-    // complete sample drives detection as an `isin [|| isNull]` filter
-    // that pushes down to the parquet scan — the distinct+persist
-    // keyFrame and its broadcast semi-join are built only for the
-    // big-sample / multi-key fallbacks.
-    val MaxDriverKeys = 100000
-    val trackedKey: Option[String] = keyCols match {
-      case Seq(k) if snap.stats.valuesIterator.flatten.exists(_.col == k) ||
-          snap.blooms.valuesIterator.flatten.exists(_.col == k) ||
-          partitionColOf(snap).contains(k) => Some(k)
-      case _ => None
+    // detection — the shared key planner ([[planKeys]]), NULL-SAFE:
+    // this is a REPLACE primitive (the aggregate view's dims may
+    // legitimately be NULL — a NULL group key is a group like any
+    // other), not a SQL join. A key column whose keys include NULL
+    // keeps every file (min/max stats exclude nulls). A small single-
+    // column sample detects as an `isin [|| isNull]` filter pushed
+    // into the candidate scan; otherwise a null-safe semi-join
+    // against the key rows.
+    val plan = planKeys(snap, keys, keyCols, nullSafe = true)
+    val updates = dvSidecarsOf(s, dir, snap, plan.candidates) { alive =>
+      plan.sample match {
+        case Some(tuples) if keyCols.length == 1 && isinSafe(tuples.map(_.get(0))) =>
+          val k = keyCols.head
+          val vals = tuples.map(_.get(0))
+          val nonNull = vals.filterNot(_ == null)
+          val base = if (nonNull.isEmpty) lit(false) else col(k).isin(nonNull: _*)
+          alive.filter(if (vals.contains(null)) base || col(k).isNull else base)
+        case _ =>
+          val kf = keyRows(s, keys, keyCols, plan).select(
+            keyCols.map(c => col(c).as(s"__graft_rk_$c")): _*)
+          alive.join(kf, keyCols.map(c => alive(c) <=> col(s"__graft_rk_$c"))
+            .reduce(_ && _), "left_semi")
+      }
     }
-    val sampled: Option[IndexedSeq[Any]] =
-      trackedKey.flatMap(k => sampleDistinct(keys, k, MaxDriverKeys))
-    val keyFrame: Option[DataFrame] =
-      if (sampled.exists(isinSafe)) None
-      else Some(keys.select(keyCols.map(col): _*).distinct().persist())
-    try {
-      val candidates: Vector[String] = trackedKey match {
-        case Some(k) => sampled match {
-          case Some(sample) =>
-            if (sample.isEmpty) Vector.empty
-            else if (sample.contains(null)) snap.files
-            else pruneFilesForKeys(snap, k, sample)
-          case None =>
-            val env = keyFrame.get.agg(min(col(k)), max(col(k))).head()
-            snap.schema.map(_(k).dataType) match {
-              case Some(_: org.apache.spark.sql.types.NumericType) =>
-                pruneFiles(snap, k,
-                  BigDecimal(env.get(0).toString), BigDecimal(env.get(1).toString))
-              case Some(org.apache.spark.sql.types.StringType) =>
-                pruneFilesString(snap, k, env.getString(0), env.getString(1))
-              case _ => snap.files
-            }
-        }
-        case None => snap.files
-      }
-      val updates: Seq[(String, String, Long)] =
-        if (candidates.isEmpty) Vector.empty
+    require(updates.forall(u => snap.files.contains(u._1)),
+      s"detection scan returned files outside the snapshot: ${updates.map(_._1).take(3).toSeq}")
+
+    // staging — [[appendBatch]]'s rules: evolve-checked schema,
+    // CHECK constraints, declared layout, uniform skipping metadata
+    evolveSchema(snap.schema, rows.schema)
+    snap.declaredPartitionCol.filter(_ != partitionCol).foreach { d =>
+      throw new IllegalArgumentException(
+        s"lake $dir was declared PARTITIONED BY ($d); cannot replace " +
+          s"partitioned by '$partitionCol'")
+    }
+    val effStats = (statsCols ++ snap.declaredStatsCols).distinct
+    val effBlooms = (bloomCols ++ snap.declaredBloomCols).distinct
+    val (staged, stagedBuckets) = stageFiles(s, root,
+      withCheckConstraints(rows, snap.constraints, snap.renames),
+      partitionCol, maxRecordsPerFile = 1024 * 1024, Map.empty,
+      snap.declaredBucket)
+    val (stagedStats, stagedRows) = footerMetaAll(s, root, staged, effStats)
+    val stagedBlooms = buildBlooms(s, dir, staged, effBlooms, stagedRows)
+
+    var duplicate = false
+    val touched = updates.map(_._1).toSet
+    commitLoop(root) {
+      case None => throw new IllegalStateException(s"manifest vanished from $dir")
+      case Some(latest) =>
+        if (latest.txns.get(appId).exists(_ >= batchId)) { duplicate = true; None }
         else {
-          val raw = manifestScan(s, dir, candidates, snap.schema,
-              restorePartitions = true, snap.sizes)
-            .withColumn("__graft_dv_path", col("_metadata.file_path"))
-            .withColumn("__graft_dv_idx", col("_metadata.row_index"))
-          val alive = dvDeletedPredicate(s, dir, snap, candidates).fold(raw)(
-            deleted => raw.filter(
-              !deleted(col("__graft_dv_path"), col("__graft_dv_idx"))))
-          val relOf = udf((p: String) => relFromUri(p))
-          val hits = (keyFrame, trackedKey, sampled) match {
-            case (None, Some(k), Some(sample)) =>
-              // null-safe isin: a NULL key is a group — match it with
-              // an explicit isNull disjunct (<=> semantics, filter form)
-              val nonNull = sample.filterNot(_ == null)
-              val base =
-                if (nonNull.isEmpty) lit(false)
-                else col(k).isin(nonNull: _*)
-              alive.filter(
-                if (sample.contains(null)) base || col(k).isNull else base)
-            case (Some(kf0), _, _) =>
-              val kf = kf0.select(
-                keyCols.map(c => col(c).as(s"__graft_rk_$c")): _*)
-              val semiCond = keyCols.map(c => alive(c) <=> col(s"__graft_rk_$c"))
-                .reduce(_ && _)
-              alive.join(kf, semiCond, "left_semi")
-            case other => throw new IllegalStateException(
-              s"unreachable detection shape: $other")
-          }
-          val matched = hits
-            .select(relOf(col("__graft_dv_path")).as("f"),
-              col("__graft_dv_idx").as("i"))
-          writeDvSidecars(s, dir, snap, matched)
-        }
-      require(updates.forall(u => snap.files.contains(u._1)),
-        s"detection scan returned files outside the snapshot: ${updates.map(_._1).take(3).toSeq}")
-
-      // staging — [[appendBatch]]'s rules: evolve-checked schema,
-      // CHECK constraints, declared layout, uniform skipping metadata
-      evolveSchema(snap.schema, rows.schema)
-      snap.declaredPartitionCol.filter(_ != partitionCol).foreach { d =>
-        throw new IllegalArgumentException(
-          s"lake $dir was declared PARTITIONED BY ($d); cannot replace " +
-            s"partitioned by '$partitionCol'")
-      }
-      val effStats = (statsCols ++ snap.declaredStatsCols).distinct
-      val effBlooms = (bloomCols ++ snap.declaredBloomCols).distinct
-      val (staged, stagedBuckets) = stageFiles(s, root,
-        withCheckConstraints(rows, snap.constraints, snap.renames),
-        partitionCol, maxRecordsPerFile = 1024 * 1024, Map.empty,
-        snap.declaredBucket)
-      val (stagedStats, stagedRows) = footerMetaAll(s, root, staged, effStats)
-      val stagedBlooms = buildBlooms(s, dir, staged, effBlooms, stagedRows)
-
-      var duplicate = false
-      val touched = updates.map(_._1).toSet
-      commitLoop(root) {
-        case None => throw new IllegalStateException(s"manifest vanished from $dir")
-        case Some(latest) =>
-          if (latest.txns.get(appId).exists(_ >= batchId)) { duplicate = true; None }
-          else {
-            if (!touched.forall(latest.files.contains))
+          if (!touched.forall(latest.files.contains))
+            throw new IllegalStateException(
+              "a concurrent commit replaced files this keyed replace " +
+                "targeted — re-run against the new snapshot")
+          touched.foreach { f =>
+            if (latest.dvs.get(f) != snap.dvs.get(f))
               throw new IllegalStateException(
-                "a concurrent commit replaced files this keyed replace " +
-                  "targeted — re-run against the new snapshot")
-            touched.foreach { f =>
-              if (latest.dvs.get(f) != snap.dvs.get(f))
-                throw new IllegalStateException(
-                  "a concurrent DV delete touched the same files — " +
-                    "re-run against the new snapshot")
-            }
-            Some(Ledger(latest.files ++ staged,
-              latest.txns + (appId -> batchId),
-              latest.stats ++ stagedStats, "replace-keys",
-              Some(evolveSchema(latest.schema, rows.schema)),
-              latest.blooms ++ stagedBlooms,
-              latest.rows ++ stagedRows,
-              buckets = stagedBuckets,
-              dvs = Some(latest.dvs ++ updates.map { case (f, rel, c) =>
-                f -> DvStore.Dv(rel, c) })))
+                "a concurrent DV delete touched the same files — " +
+                  "re-run against the new snapshot")
           }
-      }
-      if (duplicate) staged.foreach(f => Files.deleteIfExists(root.resolve(f)))
-      !duplicate
-    } finally { keyFrame.foreach(_.unpersist()); () }
+          Some(Ledger(latest.files ++ staged,
+            latest.txns + (appId -> batchId),
+            latest.stats ++ stagedStats, "replace-keys",
+            Some(evolveSchema(latest.schema, rows.schema)),
+            latest.blooms ++ stagedBlooms,
+            latest.rows ++ stagedRows,
+            buckets = stagedBuckets,
+            dvs = Some(latest.dvs ++ updates.map { case (f, rel, c) =>
+              f -> DvStore.Dv(rel, c) })))
+        }
+    }
+    if (duplicate) staged.foreach(f => Files.deleteIfExists(root.resolve(f)))
+    !duplicate
   }
 
   /** One aggregate of an incrementally maintained GROUP-BY view:
@@ -4857,15 +4854,15 @@ object ManifestLake {
             snapV.stats.valuesIterator.flatten.exists(_.col == physK) ||
               snapV.blooms.valuesIterator.flatten.exists(_.col == physK) ||
               partitionColOf(snapV).contains(physK)
-          val MaxDriverKeys = 100000
-          // ONE no-shuffle sample job ([[sampleDistinct]]) instead of
+          // ONE no-shuffle sample job ([[sampleKeyTuples]]) instead of
           // distinct+CollectLimit — per micro-batch cost on the drain.
           // Sampled from the CACHED batch, not from `delta`: the
           // delta's group-by keys are exactly the batch's distinct
           // dims, and sampling the batch keeps the job a narrow
           // cache-read instead of replaying the delta's shuffle
           val sample: Option[IndexedSeq[Any]] =
-            if (tracked) sampleDistinct(b, dims.head, MaxDriverKeys)
+            if (tracked) sampleKeyTuples(b.select(col(dims.head)), MaxDriverKeys)
+              .map(_.map(_._1.get(0)))
             else None
           sample match {
             case Some(vals) if vals.nonEmpty =>
@@ -5198,7 +5195,6 @@ object ManifestLake {
             snapF.stats.valuesIterator.flatten.exists(_.col == physK) ||
               snapF.blooms.valuesIterator.flatten.exists(_.col == physK) ||
               partitionColOf(snapF).contains(physK)
-          val MaxDriverKeys = 100000
           val sample: Option[IndexedSeq[Any]] =
             if (tracked) {
               val (sm, hw) = sampleKeysAndHw(b, dimPkCol,
@@ -5473,10 +5469,8 @@ object ManifestLake {
   private[core] def pruneFilesForKeys(snap: Snapshot, col: String,
                                       keyVals: Seq[Any]): Vector[String] = {
     def toBound(v: Any): Option[Bound] = v match {
-      case null              => None
-      case n: java.lang.Number => Some(Bound.Num(BigDecimal(n.toString)))
-      case s: String         => Some(Bound.Str(s))
-      case _                 => None
+      case s: String => Some(Bound.Str(s))
+      case _         => numBound(v).map(Bound.Num)
     }
     val bounds = keyVals.map(toBound)
     if (bounds.exists(_.isEmpty)) return snap.files
@@ -5486,9 +5480,14 @@ object ManifestLake {
     // directory-encoded, never stored in the file — it has no footer
     // stats or blooms, so without this layer a partition-keyed probe
     // degrades to the full file list. Escaped like the writer escapes
-    // (survives()'s rule), exact-match per key.
+    // (survives()'s rule), exact-match per key. Floating keys skip it:
+    // `-0.0` equals `0.0` but names a different directory.
+    val floating = keyVals.exists {
+      case _: java.lang.Double | _: java.lang.Float => true
+      case _ => false
+    }
     val partDirs: Option[Set[String]] =
-      if (!partitionColOf(snap).contains(col)) None
+      if (floating || !partitionColOf(snap).contains(col)) None
       else Some(keyVals.map(v => s"$col=" +
         org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
           .escapePathName(String.valueOf(v))).toSet)
