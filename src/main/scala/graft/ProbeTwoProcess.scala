@@ -9,7 +9,7 @@ import graft.core.ManifestLake
 
 /** TWO-JVM commit-race probe — the lake's cross-PROCESS writer-safety
   * claim, exercised for real instead of asserted: every prior race pin
-  * (LayoutSpec's `beforeCommit` seams) runs two THREADS in one JVM,
+  * (specs arming `ManifestLake.onNextCommit`) runs two THREADS in one JVM,
   * where `Files.createLink`'s CAS could in principle be masked by
   * in-process serialization. The reference's writers are genuinely
   * separate OS processes coordinating only through shared state

@@ -472,9 +472,9 @@ private[core] final case class GraftLakeTable(
     // snapshot so an ALTER TABLE that flipped the mode after this
     // table resolved still governs the delete it races with.
     if (ManifestLake.latestSnapshot(dir).exists(_.declaredDeleteMode == "merge-on-read"))
-      ManifestLake.deleteWhereDv(spark, dir, cond, () => (), Some(candidates))
+      ManifestLake.deleteWhereDv(spark, dir, cond, Some(candidates))
     else
-      ManifestLake.deleteWhere(spark, dir, cond, () => (), Some(candidates))
+      ManifestLake.deleteWhere(spark, dir, cond, Some(candidates))
     ()
   }
 

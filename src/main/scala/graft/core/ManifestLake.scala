@@ -921,9 +921,6 @@ object ManifestLake {
     } finally Files.deleteIfExists(tmp)
   }
 
-  /** Rebase-and-retry commit loop: `intent` maps the latest committed
-    * snapshot to the desired file list (or None to abandon — e.g. a
-    * compaction whose inputs another compactor already replaced). */
   /** A commit's desired outcome: the full file list, writer
     * high-waters, and per-file stats (pruned to `files`' keys at
     * write). */
@@ -939,8 +936,34 @@ object ManifestLake {
                                   dvs: Option[Map[String, DvStore.Dv]] = None,
                                   cdf: Vector[String] = Vector.empty)
 
+  private val commitHooks =
+    new java.util.concurrent.ConcurrentHashMap[String, () => Unit]()
+
+  private def hookKey(root: Path): String = root.toAbsolutePath.normalize.toString
+
+  /** Test seam, the one pre-commit window every write shares: while
+    * `body` runs, the next [[commitLoop]] on lake `dir` (spelled any
+    * way that normalizes to the same absolute path, from any thread)
+    * runs `hook` once on entry — after the operation has staged its
+    * files, sidecars, stats and blooms, before the first read of the
+    * latest snapshot its CAS rebases on. A concurrent commit made
+    * inside `hook` lands in exactly the window a racing writer can
+    * hit; it passes straight through, since the hook is removed
+    * before it runs. A throwing hook is a crash before the CAS. The
+    * scope clears an unfired hook on exit. */
+  private[core] def onNextCommit[T](dir: String)(hook: => Unit)(body: => T): T = {
+    val key = hookKey(Paths.get(dir))
+    val fire: () => Unit = () => hook
+    commitHooks.put(key, fire)
+    try body finally { commitHooks.remove(key, fire); () }
+  }
+
+  /** Rebase-and-retry commit loop: `intent` maps the latest committed
+    * snapshot to the desired file list (or None to abandon — e.g. a
+    * compaction whose inputs another compactor already replaced). */
   private def commitLoop(root: Path)(
       intent: Option[Snapshot] => Option[Ledger]): Option[Snapshot] = {
+    Option(commitHooks.remove(hookKey(root))).foreach(_())
     var attempt = 0
     // commit-time size capture memo — a CAS retry re-runs the intent
     // but never re-stats a file this loop already measured
@@ -1866,12 +1889,6 @@ object ManifestLake {
     * files those commits added (delta-proportional) and refuses if any
     * violating row slipped in — so the constraint only ever commits
     * against a corpus it validated. */
-  /** Test seam (the [[beforeCommitReplace]] pattern): runs between
-    * [[addConstraint]]'s validation scan and its property commit — the
-    * window a concurrent append must be caught in. Production value is
-    * a no-op; specs that swap it in restore it in a finally. */
-  @volatile private[core] var beforeConstraintCommit: () => Unit = () => ()
-
   def addConstraint(s: SparkSession, dir: String, name: String,
                     checkExpr: String): Snapshot = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || c == '_'),
@@ -1898,7 +1915,6 @@ object ManifestLake {
     if (violations > 0L) throw new IllegalStateException(
       s"cannot add constraint '$name' CHECK ($checkExpr): $violations " +
         "existing row(s) violate it")
-    beforeConstraintCommit()
     commitLoop(Paths.get(dir)) {
       case None => throw new IllegalStateException(s"manifest vanished from $dir")
       case Some(latest) =>
@@ -3068,16 +3084,13 @@ object ManifestLake {
             !phys0.columns.contains(f.name))
           .foldLeft(phys0)((d, f) =>
             d.withColumn(f.name, lit(null).cast(f.dataType)))
-        merge(s, dir, phys, keyCols.map(physicalColName(sn, _)), () => ())
-      case None => merge(s, dir, updates, keyCols, () => ())
+        mergePhysical(s, dir, phys, keyCols.map(physicalColName(sn, _)))
+      case None => mergePhysical(s, dir, updates, keyCols)
     }
 
-  /** Test seam, as for deleteWhere/compact: `beforeCommit` runs after
-    * the rewrites and staged writes, before the commit loop — the
-    * window a concurrent commit must rebase over. */
-  private[core] def merge(s: SparkSession, dir: String, updates: DataFrame,
-                          keyCols: Seq[String],
-                          beforeCommit: () => Unit): MergeStats = {
+  /** [[merge]] over PHYSICAL column names. */
+  private def mergePhysical(s: SparkSession, dir: String, updates: DataFrame,
+                            keyCols: Seq[String]): MergeStats = {
     val root = Paths.get(dir)
     val snap = latestSnapshot(dir).getOrElse(
       throw new IllegalStateException(s"no committed manifest in $dir"))
@@ -3226,7 +3239,6 @@ object ManifestLake {
             (pre.toSeq ++ post.toSeq :+ ins).reduce(_ unionByName _))
         }
 
-      beforeCommit()
       commitLoop(root) {
         case None => throw new IllegalStateException(s"manifest vanished from $dir")
         case Some(latest) =>
@@ -3258,16 +3270,6 @@ object ManifestLake {
     * (merge, the SQL row-level UPDATE/DELETE): rebases over concurrent
     * appends by set-union; aborts loudly when a racing commit replaced
     * one of this rewrite's inputs. */
-  /** Test seam for the SQL DML path: [[commitReplace]] runs it after
-    * the rewrite's metadata is derived, immediately before the commit
-    * loop — the window a concurrent commit must be rebased over (or
-    * abort on). The Scala-path twin is the `beforeCommit` PARAMETER
-    * threaded through merge/deleteWhere/compact; the SQL path reaches
-    * commitReplace through Spark's DSv2 write machinery where no
-    * parameter can be threaded, hence the hook. Production value is a
-    * no-op; specs that swap it in must restore it in a finally. */
-  @volatile private[core] var beforeCommitReplace: () => Unit = () => ()
-
   private[core] def commitReplace(s: SparkSession, dir: String,
                                   removed: Set[String], added: Vector[String],
                                   op: String,
@@ -3316,7 +3318,6 @@ object ManifestLake {
       if (snap.cdfEnabled && Set("delete", "update", "merge").contains(op))
         cdfDiff(s, dir, snap, removed, added, op)
       else Vector.empty
-    beforeCommitReplace()
     commitLoop(root) {
       case None => throw new IllegalStateException(s"manifest vanished from $dir")
       case Some(latest) =>
@@ -3514,16 +3515,7 @@ object ManifestLake {
     * rewritten. */
   def deleteWhere(s: SparkSession, dir: String,
                   predicate: org.apache.spark.sql.Column): Long =
-    deleteWhere(s, dir, predicate, () => ())
-
-  /** Test seam, as for compact: `beforeCommit` runs after the rewrites
-    * and before the commit loop — the window a concurrent append's
-    * commit must be rebased over (set-union keeps it; only a commit
-    * that REPLACED one of this delete's inputs aborts). */
-  private[core] def deleteWhere(s: SparkSession, dir: String,
-                                predicate: org.apache.spark.sql.Column,
-                                beforeCommit: () => Unit): Long =
-    deleteWhere(s, dir, predicate, beforeCommit, None)
+    deleteWhere(s, dir, predicate, None)
 
   /** `candidatesOf`, when given, bounds the DETECTION scan: applied to
     * the snapshot THIS delete resolves (never a caller's stale one —
@@ -3538,7 +3530,6 @@ object ManifestLake {
     * to files with matches. */
   private[core] def deleteWhere(s: SparkSession, dir: String,
                                 predicate: org.apache.spark.sql.Column,
-                                beforeCommit: () => Unit,
                                 candidatesOf: Option[Snapshot => Vector[String]]): Long = {
     val root = Paths.get(dir)
     val snap = latestSnapshot(dir).getOrElse(
@@ -3612,7 +3603,6 @@ object ManifestLake {
         maxRecordsPerFile = 1024 * 1024, Map.empty, snap.declaredBucket)
     }
 
-    beforeCommit()
     val removedSet = affected.toSet
     val uniformCols = affected.map(f =>
         snap.stats.getOrElse(f, Vector.empty).map(_.col).toSet)
@@ -3958,12 +3948,12 @@ object ManifestLake {
     * Returns the number of rows newly deleted. */
   def deleteWhereDv(s: SparkSession, dir: String,
                     predicate: org.apache.spark.sql.Column): Long =
-    deleteWhereDv(s, dir, predicate, () => ())
+    deleteWhereDv(s, dir, predicate, None)
 
+  /** `candidatesOf` bounds the detection scan, as for [[deleteWhere]]. */
   private[core] def deleteWhereDv(s: SparkSession, dir: String,
                                   predicate: org.apache.spark.sql.Column,
-                                  beforeCommit: () => Unit,
-                                  candidatesOf: Option[Snapshot => Vector[String]] = None): Long = {
+                                  candidatesOf: Option[Snapshot => Vector[String]]): Long = {
     val root = Paths.get(dir)
     val snap = latestSnapshot(dir).getOrElse(
       throw new IllegalStateException(s"no committed manifest in $dir"))
@@ -3985,7 +3975,6 @@ object ManifestLake {
     require(updates.forall(u => snap.files.contains(u._1)),
       s"detection scan returned files outside the snapshot: ${updates.map(_._1).take(3).toSeq}")
 
-    beforeCommit()
     val touched = updates.map(_._1).toSet
     commitLoop(root) {
       case None => throw new IllegalStateException(s"manifest vanished from $dir")
@@ -4126,14 +4115,7 @@ object ManifestLake {
     * Returns the number of rows updated. */
   def updateWhereDv(s: SparkSession, dir: String,
                     predicate: org.apache.spark.sql.Column,
-                    assignments: Seq[(String, org.apache.spark.sql.Column)]): Long =
-    updateWhereDv(s, dir, predicate, assignments, () => ())
-
-  private[core] def updateWhereDv(s: SparkSession, dir: String,
-                                  predicate: org.apache.spark.sql.Column,
-                                  assignments: Seq[(String, org.apache.spark.sql.Column)],
-                                  beforeCommit: () => Unit,
-                                  candidatesOf: Option[Snapshot => Vector[String]] = None): Long = {
+                    assignments: Seq[(String, org.apache.spark.sql.Column)]): Long = {
     require(assignments.nonEmpty, "UPDATE needs at least one SET assignment")
     val root = Paths.get(dir)
     val snap = latestSnapshot(dir).getOrElse(
@@ -4161,14 +4143,7 @@ object ManifestLake {
       requireDet(predicate, "UPDATE predicate")
       assignments.foreach { case (c, e) => requireDet(e, s"UPDATE SET '$c'") }
     }
-    val scanFiles = candidatesOf match {
-      case Some(f) =>
-        val c = f(snap)
-        require(c.forall(snap.files.contains),
-          "update candidates must come from the current snapshot")
-        c
-      case None => selfCandidates(s, snap, predicate).getOrElse(snap.files)
-    }
+    val scanFiles = selfCandidates(s, snap, predicate).getOrElse(snap.files)
     if (scanFiles.isEmpty) return 0L
     val raw = manifestScan(s, dir, scanFiles, snap.schema,
         restorePartitions = true, snap.sizes)
@@ -4228,7 +4203,6 @@ object ManifestLake {
       val (stagedStats, stagedRows) = footerMetaAll(s, root, staged, uniformStats)
       val stagedBlooms = buildBlooms(s, dir, staged, uniformBlooms, stagedRows)
 
-      beforeCommit()
       val touched = updates.map(_._1).toSet
       commitLoop(root) {
         case None => throw new IllegalStateException(s"manifest vanished from $dir")
@@ -5645,10 +5619,6 @@ object ManifestLake {
     }.reduce(_ bitwiseOR _)
   }
 
-  /** Compact fragmented partitions of the latest snapshot and commit
-    * the swap. Safe under concurrent appends AND concurrent compactors:
-    * the rebase keeps files appended after our snapshot, and abandons
-    * any partition whose inputs a faster compactor already replaced. */
   /** Auto-sized rewrite-pool bound: a per-unit rewrite is typically a
     * ONE-task job (the coalesce target), so a fixed 8-way pool leaves
     * 24 of 32 cores idle through a whole compaction — the r18 scale
@@ -5658,23 +5628,12 @@ object ManifestLake {
   private def compactPoolBound(s: SparkSession): Int =
     math.min(64, math.max(8, s.sparkContext.defaultParallelism))
 
-  def compact(s: SparkSession, dir: String, partitionCol: String,
-              targetRecordsPerFile: Long, maxConcurrent: Int = 0,
-              clusterBy: Option[String] = None,
-              onlyPartitions: Option[Set[String]] = None): Seq[CompactStat] = {
-    // column mapping: name args arrive in user (logical) terms
-    val m = latestSnapshot(dir).filter(_.mappingActive)
-    def phys(c: String): String = m.fold(c)(physicalColName(_, c))
-    val bound = if (maxConcurrent > 0) maxConcurrent else compactPoolBound(s)
-    compact(s, dir, phys(partitionCol), targetRecordsPerFile, bound,
-      () => (), clusterBy.map(phys), onlyPartitions)
-  }
-
-  /** Test seam: `beforeCommit` runs after the rewrites finish and
-    * before the commit loop starts — the window a concurrent writer's
-    * commit must be rebased over. Package-private so specs can pin the
-    * race deterministically instead of hoping a sleep lines up. */
-  /** With `clusterBy` set, compaction additionally RANGE-CLUSTERS each
+  /** Compact fragmented partitions of the latest snapshot and commit
+    * the swap. Safe under concurrent appends AND concurrent compactors:
+    * the rebase keeps files appended after our snapshot, and abandons
+    * any partition whose inputs a faster compactor already replaced.
+    *
+    * With `clusterBy` set, compaction additionally RANGE-CLUSTERS each
     * rewritten partition on that column (the Delta `OPTIMIZE ... ZORDER
     * BY` analogue at one dimension): rewrites range-partition + sort
     * instead of coalescing, so each output file covers a narrow
@@ -5685,11 +5644,23 @@ object ManifestLake {
     * provably clustered (within-file order never affects file-level
     * skipping) and is skipped without opening anything — a second
     * clustered compaction burns no version. */
-  private[core] def compact(s: SparkSession, dir: String, partitionCol: String,
-                            targetRecordsPerFile: Long, maxConcurrent: Int,
-                            beforeCommit: () => Unit,
-                            clusterBy: Option[String],
-                            onlyPartitions: Option[Set[String]]): Seq[CompactStat] = {
+  def compact(s: SparkSession, dir: String, partitionCol: String,
+              targetRecordsPerFile: Long, maxConcurrent: Int = 0,
+              clusterBy: Option[String] = None,
+              onlyPartitions: Option[Set[String]] = None): Seq[CompactStat] = {
+    // column mapping: name args arrive in user (logical) terms
+    val m = latestSnapshot(dir).filter(_.mappingActive)
+    def phys(c: String): String = m.fold(c)(physicalColName(_, c))
+    val bound = if (maxConcurrent > 0) maxConcurrent else compactPoolBound(s)
+    compactPhysical(s, dir, phys(partitionCol), targetRecordsPerFile, bound,
+      clusterBy.map(phys), onlyPartitions)
+  }
+
+  /** [[compact]] over PHYSICAL column names. */
+  private def compactPhysical(s: SparkSession, dir: String, partitionCol: String,
+                              targetRecordsPerFile: Long, maxConcurrent: Int,
+                              clusterBy: Option[String],
+                              onlyPartitions: Option[Set[String]]): Seq[CompactStat] = {
     require(targetRecordsPerFile > 0,
       s"targetRecordsPerFile must be positive: $targetRecordsPerFile")
     val root = Paths.get(dir)
@@ -5861,7 +5832,6 @@ object ManifestLake {
     // — they only ever union paths in). If a faster compactor removed
     // any of our olds, our rewrite is stale double-work: abandon it and
     // delete our staged news.
-    beforeCommit()
     val abandoned = scala.collection.mutable.Set.empty[String]
     val committed = if (swaps.isEmpty) latestSnapshot(dir) else commitLoop(root) {
       case None => throw new IllegalStateException(s"manifest vanished from $dir")
@@ -5926,14 +5896,7 @@ object ManifestLake {
     * bytes, not lake size — turns the zero-shuffle join back on.
     * CDC-invisible (a byte rewrite, like compact). Returns the number
     * of files rewritten. */
-  def rebucket(s: SparkSession, dir: String): Int =
-    rebucket(s, dir, () => ())
-
-  /** Test seam, as for merge/deleteWhere: `beforeCommit` runs after
-    * the rewrites, before the commit loop — the window a concurrent
-    * append's commit must be rebased over (set-union keeps it). */
-  private[core] def rebucket(s: SparkSession, dir: String,
-                             beforeCommit: () => Unit): Int = {
+  def rebucket(s: SparkSession, dir: String): Int = {
     val root = Paths.get(dir)
     val snap = latestSnapshot(dir).getOrElse(
       throw new IllegalStateException(s"no committed manifest in $dir"))
@@ -5950,7 +5913,6 @@ object ManifestLake {
     val bloomCols = snap.blooms.valuesIterator.flatten.map(_.col).toSeq.distinct.sorted
     val newBlooms = buildBlooms(s, dir, news, bloomCols, newRows)
     val removedSet = untagged.toSet
-    beforeCommit()
     commitLoop(root) {
       case None => throw new IllegalStateException(s"manifest vanished from $dir")
       case Some(latest) =>

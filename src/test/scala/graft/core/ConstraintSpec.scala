@@ -242,30 +242,22 @@ class ConstraintSpec extends SparkSpec {
     mkLake(dir)
     // a concurrent append lands AFTER the validation scan, BEFORE the
     // property commit — with violating rows the constraint must refuse
-    ManifestLake.beforeConstraintCommit = () => {
-      ManifestLake.beforeConstraintCommit = () => () // fire once
-      ManifestLake.append(spark, dir, rows(9000, -7), "source")
-    }
-    try {
-      val e = intercept[IllegalStateException](
-        ManifestLake.addConstraint(spark, dir, "chars_nonneg", "n_chars >= 0"))
-      assert(e.getMessage.contains("concurrent commit") &&
-        e.getMessage.contains("violating"), e.getMessage)
-      assert(ManifestLake.latestSnapshot(dir).get.constraints.isEmpty,
-        "the refused constraint must not be committed")
-    } finally ManifestLake.beforeConstraintCommit = () => ()
+    val e = intercept[IllegalStateException](
+      ManifestLake.onNextCommit(dir) {
+        ManifestLake.append(spark, dir, rows(9000, -7), "source"); ()
+      }(ManifestLake.addConstraint(spark, dir, "chars_nonneg", "n_chars >= 0")))
+    assert(e.getMessage.contains("concurrent commit") &&
+      e.getMessage.contains("violating"), e.getMessage)
+    assert(ManifestLake.latestSnapshot(dir).get.constraints.isEmpty,
+      "the refused constraint must not be committed")
     // with a CLEAN concurrent append the constraint still commits
     // (delta re-scan passes; the rebase is not itself a failure)
-    ManifestLake.beforeConstraintCommit = () => {
-      ManifestLake.beforeConstraintCommit = () => ()
-      ManifestLake.append(spark, dir, rows(9100, 7), "source")
-    }
-    try {
-      ManifestLake.deleteWhereDv(spark, dir, $"doc_id" >= 9000 && $"doc_id" < 9100)
-      ManifestLake.addConstraint(spark, dir, "chars_nonneg", "n_chars >= 0")
-      assert(ManifestLake.latestSnapshot(dir).get.constraints ==
-        Seq("chars_nonneg" -> "n_chars >= 0"))
-    } finally ManifestLake.beforeConstraintCommit = () => ()
+    ManifestLake.deleteWhereDv(spark, dir, $"doc_id" >= 9000 && $"doc_id" < 9100)
+    ManifestLake.onNextCommit(dir) {
+      ManifestLake.append(spark, dir, rows(9100, 7), "source"); ()
+    }(ManifestLake.addConstraint(spark, dir, "chars_nonneg", "n_chars >= 0"))
+    assert(ManifestLake.latestSnapshot(dir).get.constraints ==
+      Seq("chars_nonneg" -> "n_chars >= 0"))
   }
 
   test("clone strips analyze.* props (source-relative staleness) and redoes size-mismatched partial copies") {

@@ -161,27 +161,27 @@ class DvSpec extends SparkSpec {
     val dir = tmp("dv_race")
     mkLake(dir)
     // append lands between sidecar writes and the CAS — set-union keeps it
-    val n = ManifestLake.deleteWhereDv(spark, dir, $"doc_id" === 5, () => {
+    val n = ManifestLake.onNextCommit(dir) {
       val extra = spark.range(1000, 1010)
         .select($"id".as("doc_id"), lit("s0").as("source"), ($"id" * 10).as("n_chars"))
       ManifestLake.append(spark, dir, extra, "source", statsCols = Seq("doc_id"))
       ()
-    })
+    }(ManifestLake.deleteWhereDv(spark, dir, $"doc_id" === 5))
     assert(n == 1L)
     assert(ManifestLake.read(spark, dir).count() == 209L,
       "the racing append's rows and the DV delete must both survive")
     // a rewrite that replaced the target file aborts the DV delete
     intercept[IllegalStateException] {
-      ManifestLake.deleteWhereDv(spark, dir, $"doc_id" === 6, () => {
+      ManifestLake.onNextCommit(dir) {
         ManifestLake.compact(spark, dir, "source", targetRecordsPerFile = 1024L * 1024); ()
-      })
+      }(ManifestLake.deleteWhereDv(spark, dir, $"doc_id" === 6))
     }
     // and a racing DV delete on the SAME file aborts too (ids 11 and
     // 13 are odd — post-compact they share the single s1 file)
     intercept[IllegalStateException] {
-      ManifestLake.deleteWhereDv(spark, dir, $"doc_id" === 11, () => {
+      ManifestLake.onNextCommit(dir) {
         ManifestLake.deleteWhereDv(spark, dir, $"doc_id" === 13); ()
-      })
+      }(ManifestLake.deleteWhereDv(spark, dir, $"doc_id" === 11))
     }
   }
 
@@ -347,23 +347,23 @@ class DvSpec extends SparkSpec {
         Seq("n_chars" -> (rand() * 100).cast("long")))
     }
     // concurrent append rebases (set-union keeps both)
-    val n = ManifestLake.updateWhereDv(spark, dir, $"doc_id" === 5,
-      Seq("n_chars" -> lit(-5L)), () => {
-        val extra = spark.range(1000, 1010)
-          .select($"id".as("doc_id"), lit("s0").as("source"), ($"id" * 10).as("n_chars"))
-        ManifestLake.append(spark, dir, extra, "source", statsCols = Seq("doc_id"))
-        ()
-      })
+    val n = ManifestLake.onNextCommit(dir) {
+      val extra = spark.range(1000, 1010)
+        .select($"id".as("doc_id"), lit("s0").as("source"), ($"id" * 10).as("n_chars"))
+      ManifestLake.append(spark, dir, extra, "source", statsCols = Seq("doc_id"))
+      ()
+    }(ManifestLake.updateWhereDv(spark, dir, $"doc_id" === 5,
+      Seq("n_chars" -> lit(-5L))))
     assert(n == 1L)
     // UPDATE preserves row count: 200 original + 10 racing appends
     assert(ManifestLake.read(spark, dir).count() == 210L)
     assert(ManifestLake.read(spark, dir).filter($"n_chars" === -5L).count() == 1L)
     // a rewrite that replaced the target file aborts the update
     intercept[IllegalStateException] {
-      ManifestLake.updateWhereDv(spark, dir, $"doc_id" === 6,
-        Seq("n_chars" -> lit(-6L)), () => {
-          ManifestLake.compact(spark, dir, "source", targetRecordsPerFile = 1024L * 1024); ()
-        })
+      ManifestLake.onNextCommit(dir) {
+        ManifestLake.compact(spark, dir, "source", targetRecordsPerFile = 1024L * 1024); ()
+      }(ManifestLake.updateWhereDv(spark, dir, $"doc_id" === 6,
+        Seq("n_chars" -> lit(-6L))))
     }
   }
 

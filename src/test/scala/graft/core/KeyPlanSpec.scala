@@ -142,6 +142,56 @@ class KeyPlanSpec extends SparkSpec {
     assert(ManifestLake.read(spark, dir).count() == seed.length + fresh.length + 11L)
   }
 
+  test("keyed writes at the commit hook: deleteKeysDv rebases over an append, aborts on a compact; a re-delivered replace commits once") {
+    val dir = scoreLake("kp_race")
+    val seed = (0L until 40L).map(v => (Some(v), (v % 4).toInt, 0, v.toDouble))
+    ManifestLake.merge(spark, dir, frame(seed), keyCols)
+
+    // an append lands after the delete's detection and sidecar writes,
+    // before its CAS: the set-union rebase keeps it
+    val late = (100L until 110L).map(v => (Some(v), (v % 4).toInt, 1, -1.0))
+    val n = ManifestLake.onNextCommit(dir) {
+      ManifestLake.append(spark, dir, frame(late), "model_id"); ()
+    }(ManifestLake.deleteKeysDv(spark, dir, keyFrame(Seq((Some(5L), 1), (Some(6L), 2))), keyCols))
+    assert(n == 2L)
+    val afterDelete = seed.filterNot(r => r._1.contains(5L) || r._1.contains(6L)) ++ late
+    assert(rowsOf(dir) == afterDelete.sortBy(_.toString))
+
+    // a compaction that replaced the targeted file aborts the delete
+    val v0 = ManifestLake.latestSnapshot(dir).get.version
+    val e = intercept[IllegalStateException] {
+      ManifestLake.onNextCommit(dir) {
+        ManifestLake.compact(spark, dir, "model_id", targetRecordsPerFile = 1000L); ()
+      }(ManifestLake.deleteKeysDv(spark, dir, keyFrame(Seq((Some(7L), 3))), keyCols))
+    }
+    assert(e.getMessage.contains("re-run deleteKeysDv"), e.getMessage)
+    val compacted = ManifestLake.latestSnapshot(dir).get
+    assert(compacted.version == v0 + 1 && compacted.op == "compact",
+      "the compaction stands; the delete burned no version")
+    assert(rowsOf(dir) == afterDelete.sortBy(_.toString))
+
+    // the same (appId, batchId) delivered again inside the replace's
+    // own commit window: the inner delivery commits, the outer one
+    // finds its batch committed and drops its staged files
+    val keys = keyFrame(Seq((Some(8L), 0)))
+    val rows = frame(Seq((Some(8L), 0, 2, 8.5)))
+    def replace(): Boolean = ManifestLake.replaceKeysBatch(spark, dir, keys, rows,
+      keyCols, "kp_race", 1L, "model_id")
+    var inner = false
+    val outer = ManifestLake.onNextCommit(dir) { inner = replace() }(replace())
+    assert(inner && !outer, s"inner $inner, outer $outer")
+    val snap = ManifestLake.latestSnapshot(dir).get
+    assert(snap.version == compacted.version + 1 && snap.txns.get("kp_race").contains(1L))
+    assert(rowsOf(dir) ==
+      (afterDelete.filterNot(_._1.contains(8L)) :+ ((Some(8L), 0, 2, 8.5))).sortBy(_.toString))
+    assert(!replace(), "a later re-delivery is gated too")
+    // every data file on disk is named by some version's manifest
+    val named = (1L to snap.version).flatMap(ManifestLake.snapshotAt(dir, _))
+      .flatMap(_.files).toSet
+    val onDisk = ManifestLogModelSpec.dataFilesOnDisk(dir)
+    assert(onDisk.subsetOf(named), s"unnamed data files: ${onDisk -- named}")
+  }
+
   test("random compound-key sequences: pruned planning equals every-file planning and the model") {
     val rnd = new scala.util.Random(20261017L)
     val pruned = scoreLake("kp_prop_a", cdf = true)

@@ -193,12 +193,11 @@ class LayoutSpec extends SparkSpec {
     val late = spark.range(1000, 1040).select(
       $"id".as("doc_id"),
       concat(lit("c"), ($"id" % 2).cast("string")).as("source"))
-    val stats = ManifestLake.compact(spark, dir, "source",
-      targetRecordsPerFile = 100L, maxConcurrent = 8,
-      beforeCommit = () => {
-        ManifestLake.append(spark, dir, late.repartition($"source"), "source",
-          maxRecordsPerFile = 5L); ()
-      }, clusterBy = None, onlyPartitions = None)
+    val stats = ManifestLake.onNextCommit(dir) {
+      ManifestLake.append(spark, dir, late.repartition($"source"), "source",
+        maxRecordsPerFile = 5L); ()
+    }(ManifestLake.compact(spark, dir, "source",
+      targetRecordsPerFile = 100L, maxConcurrent = 8))
     assert(stats.forall(st => st.filesBefore == 20 && st.filesAfter == 1), stats)
 
     val back = ManifestLake.read(spark, dir)
@@ -698,12 +697,11 @@ class LayoutSpec extends SparkSpec {
         .repartitionByRange(4, $"doc_id"), "source")
     // the race, pinned: an append commits AFTER the delete's detection
     // scan + rewrites, BEFORE its commit — set-union rebase must keep it
-    val deleted = ManifestLake.deleteWhere(spark, dir, $"doc_id" < 50,
-      beforeCommit = () => {
-        ManifestLake.append(spark, dir,
-          spark.range(500, 520).select($"id".as("doc_id"), lit("h0").as("source")),
-          "source"); ()
-      })
+    val deleted = ManifestLake.onNextCommit(dir) {
+      ManifestLake.append(spark, dir,
+        spark.range(500, 520).select($"id".as("doc_id"), lit("h0").as("source")),
+        "source"); ()
+    }(ManifestLake.deleteWhere(spark, dir, $"doc_id" < 50))
     assert(deleted == 50)
     val back = ManifestLake.read(spark, dir)
     assert(back.count() == 170, "150 survivors + 20 late-appended")
@@ -771,10 +769,9 @@ class LayoutSpec extends SparkSpec {
     // rewrite anyway would RESURRECT the rows B deleted (A's survivor
     // set was computed before B ran). A must abort with a named error.
     val e = intercept[IllegalStateException] {
-      ManifestLake.deleteWhere(spark, dir, $"doc_id" < 10,
-        beforeCommit = () => {
-          assert(ManifestLake.deleteWhere(spark, dir, $"doc_id" >= 90) == 10); ()
-        })
+      ManifestLake.onNextCommit(dir) {
+        assert(ManifestLake.deleteWhere(spark, dir, $"doc_id" >= 90) == 10); ()
+      }(ManifestLake.deleteWhere(spark, dir, $"doc_id" < 10))
     }
     assert(e.getMessage.contains("re-run deleteWhere"))
     // B's delete stands; A's is NOT applied (and nothing resurrected)
@@ -869,13 +866,11 @@ class LayoutSpec extends SparkSpec {
     // and bloom rebuild (computed from the PRE-loop snapshot), BEFORE
     // its commit — the rebase must keep the appended file AND its
     // bloom, and the rewrites must carry their rebuilt filters
-    ManifestLake.compact(spark, dir, "source",
-      targetRecordsPerFile = 200L, maxConcurrent = 2,
-      beforeCommit = () => {
-        ManifestLake.append(spark, dir, docs(500, 520), "source",
-          bloomCols = Seq("doc_id")); ()
-      },
-      clusterBy = None, onlyPartitions = None)
+    ManifestLake.onNextCommit(dir) {
+      ManifestLake.append(spark, dir, docs(500, 520), "source",
+        bloomCols = Seq("doc_id")); ()
+    }(ManifestLake.compact(spark, dir, "source",
+      targetRecordsPerFile = 200L, maxConcurrent = 2))
     val snap = ManifestLake.latestSnapshot(dir).get
     assert(snap.op == "compact")
     assert(snap.files.forall(f =>
@@ -1577,12 +1572,12 @@ class LayoutSpec extends SparkSpec {
         lit(0L).as("score")).repartitionByRange(4, $"doc_id"), "source")
     val upd = spark.range(10, 20).select($"id".as("doc_id"),
       lit("r0").as("source"), lit(-5L).as("score"))
-    ManifestLake.merge(spark, raceDir, upd, Seq("doc_id"), () => {
+    ManifestLake.onNextCommit(raceDir) {
       ManifestLake.append(spark, raceDir,
         spark.range(200, 210).select($"id".as("doc_id"), lit("r0").as("source"),
           lit(9L).as("score")), "source")
       ()
-    })
+    }(ManifestLake.merge(spark, raceDir, upd, Seq("doc_id")))
     val raced = ManifestLake.read(spark, raceDir)
     assert(raced.count() == 110, "rebase must keep the racing append")
     assert(raced.filter($"score" === -5L).count() == 10)
@@ -1594,13 +1589,13 @@ class LayoutSpec extends SparkSpec {
       spark.range(0, 100).select($"id".as("doc_id"), lit("a0").as("source"),
         lit(0L).as("score")).repartitionByRange(4, $"doc_id"), "source")
     val e2 = intercept[IllegalStateException] {
-      ManifestLake.merge(spark, abortDir,
+      ManifestLake.onNextCommit(abortDir) {
+        ManifestLake.compact(spark, abortDir, "source",
+          targetRecordsPerFile = 1000L)
+        ()
+      }(ManifestLake.merge(spark, abortDir,
         spark.range(0, 100).select($"id".as("doc_id"), lit("a0").as("source"),
-          lit(-1L).as("score")), Seq("doc_id"), () => {
-          ManifestLake.compact(spark, abortDir, "source",
-            targetRecordsPerFile = 1000L)
-          ()
-        })
+          lit(-1L).as("score")), Seq("doc_id")))
     }
     assert(e2.getMessage.contains("concurrent commit replaced"))
   }
@@ -2106,8 +2101,7 @@ class LayoutSpec extends SparkSpec {
     // The race: an append commits AFTER the UPDATE's rewrite finishes,
     // BEFORE its commitReplace CAS. The set-union rebase must keep the
     // appended file (appends touch disjoint files, no conflict). Pinned
-    // via the beforeCommitReplace seam — the SQL twin of the Scala
-    // merge/delete race pins above.
+    // at the commit hook, like the Scala merge/delete race pins above.
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     val dir = Files.createTempDirectory("mracesql1").resolve("lake").toString
     spark.range(0, 400)
@@ -2115,12 +2109,12 @@ class LayoutSpec extends SparkSpec {
       .repartitionByRange(4, $"doc_id")
       .write.format("graft").option("partitionCol", "source")
       .option("statsCols", "doc_id").mode("append").save(dir)
-    ManifestLake.beforeCommitReplace = () =>
+    ManifestLake.onNextCommit(dir) {
       ManifestLake.append(spark, dir,
         spark.range(5000, 5020).select($"id".as("doc_id"), lit("p0").as("source"),
           lit(0L).as("score")), "source", statsCols = Seq("doc_id"))
-    try spark.sql(s"UPDATE graft.`$dir` SET score = -1 WHERE doc_id >= 100 AND doc_id < 150")
-    finally ManifestLake.beforeCommitReplace = () => ()
+      ()
+    }(spark.sql(s"UPDATE graft.`$dir` SET score = -1 WHERE doc_id >= 100 AND doc_id < 150"))
     val back = ManifestLake.read(spark, dir)
     assert(back.count() == 420, "the racing append's rows must survive the rebase")
     assert(back.filter($"score" === -1).count() == 50, "the update must apply")
@@ -2142,16 +2136,15 @@ class LayoutSpec extends SparkSpec {
       .repartitionByRange(8, $"doc_id")
       .write.format("graft").option("partitionCol", "source")
       .option("statsCols", "doc_id").mode("append").save(dir)
-    ManifestLake.beforeCommitReplace = () => {
+    val e = ManifestLake.onNextCommit(dir) {
       ManifestLake.compact(spark, dir, "source", targetRecordsPerFile = 1000)
       ()
-    }
-    val e = try intercept[Exception] {
+    }(intercept[Exception] {
       spark.sql(s"MERGE INTO graft.`$dir` g USING " +
         "(SELECT id AS doc_id, 'p0' AS source, -9L AS score FROM range(100, 110)) s " +
         "ON g.doc_id = s.doc_id " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
-    } finally ManifestLake.beforeCommitReplace = () => ()
+    })
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e).exists(_.contains("concurrent commit replaced files")), e.toString)

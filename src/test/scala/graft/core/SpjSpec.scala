@@ -298,12 +298,12 @@ class SpjSpec extends SparkSpec {
     mk(100, 200, false) // declares the layout
     // the race, pinned: an append commits AFTER rebucket's rewrites,
     // BEFORE its CAS — the set-union rebase must keep it
-    val n = ManifestLake.rebucket(spark, dir, () => {
+    val n = ManifestLake.onNextCommit(dir) {
       ManifestLake.append(spark, dir,
         spark.range(200, 250).select($"id".as("doc_id"), lit("s0").as("source")),
         "source")
       ()
-    })
+    }(ManifestLake.rebucket(spark, dir))
     assert(n > 0)
     val snap = ManifestLake.latestSnapshot(dir).get
     assert(ManifestLake.read(spark, dir).count() == 250,
